@@ -5,7 +5,8 @@ Prints ONE compact JSON line LAST (guaranteed <=1500 chars so the driver's
 2000-char stdout tail can never truncate it — r15's fat line landed
 ``parsed: null`` in BENCH_r15.json):
   {"metric": "...", "value": N, "unit": "sec", "sf": ..., "value_single": N,
-   "steal_pct": ..., "host_factor": ..., "queries": {...}, "detail": path}
+   "steal_pct": ..., "host_factor": ..., "cores": N, "queries": {...},
+   "detail": path}
 
 The FULL record (queries, queries_single, calibration start/end probes) is
 written to ``$BENCH_DETAIL_PATH`` (default ``BENCH_DETAIL.json`` beside this
@@ -38,6 +39,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from data_preparation_plugin_spark import get_spark, plans  # noqa: E402
 
+# The tiny fixture every timed query warms on first, so JVM/codegen
+# warm-up never pollutes the timed reps.
+from __spark_entry__ import SMOKE_SF_DIR as WARMUP_SF_DIR  # noqa: E402
+
 
 def _cpu_ticks() -> tuple[int, int]:
     """(steal, total) jiffies from /proc/stat — window-quality signal.
@@ -55,6 +60,28 @@ def _cpu_ticks() -> tuple[int, int]:
         return (vals[7] if len(vals) > 7 else 0, sum(vals))
     except OSError:  # non-Linux: no signal, not an error
         return (0, 0)
+
+
+def run_noop(df) -> None:
+    """Execute the whole plan JVM-side into the noop sink: writes nothing,
+    never funnels results through the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def best_of(spark, builder, sf_dir, reps, warmup_dir) -> tuple[float, float]:
+    """The one timing loop: warm once on ``warmup_dir`` (skipped when
+    None), then time ``reps`` fresh builds of ``builder`` at ``sf_dir``
+    into the noop sink. Returns ``(best, first)`` in seconds: the
+    steady-state minimum and the first (cold-cache, post-warm-up) rep.
+    """
+    if warmup_dir is not None:
+        run_noop(builder(spark, warmup_dir))
+    times = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        run_noop(builder(spark, sf_dir))
+        times.append(time.perf_counter() - t0)
+    return min(times), times[0]
 
 
 #: Pinned in-run calibration probe (r14 verdict item 2): three fixed-plan
@@ -79,7 +106,7 @@ CALIBRATION_SF_DIR = "/root/testdata/sf0.1"
 CALIBRATION_REPS = 5
 
 
-def calibrate(spark, run) -> dict | None:
+def calibrate(spark) -> dict | None:
     """Best-of-N the pinned probes; ratio each against its committed
     reference; geomean the ratios into one host_factor.
 
@@ -99,16 +126,16 @@ def calibrate(spark, run) -> dict | None:
 
     best: dict[str, float] = {}
     for name in CALIBRATION_REFERENCE:
-        builder = plans.QUERIES[name].builder
         # Warm at the CALIBRATION scale: codegen/JIT for these plans
         # only fully warms on the real input, and a cold first rep
         # inflates the probe by ~1.5x on sub-second rows.
-        run(builder(spark, CALIBRATION_SF_DIR))
-        b = float("inf")
-        for _ in range(CALIBRATION_REPS):
-            t0 = time.perf_counter()
-            run(builder(spark, CALIBRATION_SF_DIR))
-            b = min(b, time.perf_counter() - t0)
+        b, _ = best_of(
+            spark,
+            plans.QUERIES[name].builder,
+            CALIBRATION_SF_DIR,
+            CALIBRATION_REPS,
+            CALIBRATION_SF_DIR,
+        )
         best[name] = round(b, 4)
     ratios = {
         n: round(best[n] / CALIBRATION_REFERENCE[n], 3) for n in best
@@ -153,6 +180,34 @@ def calibrate_cold() -> dict | None:
         return None
 
 
+def calibration_record(start, end_cold, end_warm) -> dict | None:
+    """Combine the start and end probes into the calibration block (None
+    when either side is missing). ``end`` is the cold-subprocess probe
+    (see calibrate_cold); the in-session ``end_warm`` stands in when the
+    subprocess fails, and ``end_source`` says which one ``end`` is, so
+    the fallback is never silent.
+    """
+    if end_cold is not None:
+        end, end_source = end_cold, "cold"
+    else:
+        end, end_source = end_warm, "warm_fallback"
+    if start is None or end is None:
+        return None
+    return {
+        "reference_sec": CALIBRATION_REFERENCE,
+        "reference_window": "r15 2026-08-16 best-of-5 at 0.04% steal",
+        "start": start,
+        "end": end,
+        "end_warm": end_warm,
+        "end_source": end_source,
+        # One number to divide raw seconds by when comparing rounds
+        # (start + cold-subprocess end since r17).
+        "host_factor": round(
+            (start["host_factor"] * end["host_factor"]) ** 0.5, 3
+        ),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -162,10 +217,7 @@ def main() -> None:
     if os.environ.get("BENCH_CALIBRATE_ONLY") == "1":
         # Internal mode for the fresh-subprocess end probe: run ONLY the
         # pinned calibration block and print its record as the last line.
-        def _run(df) -> None:
-            df.write.format("noop").mode("overwrite").save()
-
-        print(json.dumps(calibrate(spark, _run)))
+        print(json.dumps(calibrate(spark)))
         return
 
     names = [
@@ -173,11 +225,6 @@ def main() -> None:
         for n, q in plans.QUERIES.items()
         if q.bench or os.environ.get("BENCH_ALL") == "1"
     ]
-
-    def run(df) -> None:
-        # noop sink: executes the whole plan JVM-side, writes nothing,
-        # never funnels results through the driver.
-        df.write.format("noop").mode("overwrite").save()
 
     # Repetitions per query (best-of): transient machine contention has
     # been observed to inflate single-shot wall clocks >2x on this host;
@@ -188,10 +235,13 @@ def main() -> None:
     reps = 1 if os.environ.get("BENCH_ALL") == "1" else int(
         os.environ.get("BENCH_REPS", "3")
     )
+    warmup_dir = (
+        None if os.environ.get("BENCH_NO_WARMUP") == "1" else WARMUP_SF_DIR
+    )
 
     load0 = os.getloadavg()[0]
     skip_calib = os.environ.get("BENCH_NO_CALIBRATION") == "1"
-    calib_start = None if skip_calib else calibrate(spark, run)
+    calib_start = None if skip_calib else calibrate(spark)
     # Steal window opens AFTER the start probe and closes BEFORE the end
     # probe, so calibration work never dilutes the dirty-window signal
     # for the timed queries themselves.
@@ -199,53 +249,25 @@ def main() -> None:
     timings: dict[str, float] = {}
     singles: dict[str, float] = {}
     for name in names:
-        builder = plans.QUERIES[name].builder
-        # Warm once at tiny scale so JVM/codegen warmup doesn't pollute t0.
-        if os.environ.get("BENCH_NO_WARMUP") != "1":
-            run(builder(spark, "/root/testdata/sf0.001"))
-        best = float("inf")
-        first = None
-        for _ in range(reps):
-            start = time.perf_counter()
-            run(builder(spark, sf_dir))
-            elapsed = time.perf_counter() - start
-            if first is None:
-                first = elapsed
-            best = min(best, elapsed)
+        best, first = best_of(
+            spark, plans.QUERIES[name].builder, sf_dir, reps, warmup_dir
+        )
         timings[name] = round(best, 3)
         singles[name] = round(first, 3)
 
     steal1, total1 = _cpu_ticks()
-    # End probes, both methodologies (r17): the in-session probe
-    # (``end_warm``) keeps r14-r16 comparability; the fresh-subprocess
-    # probe (``end``) is the honest one — cold JVM/JIT like the start
-    # probe and the committed reference, so host_factor measures the
-    # HOST, not session warmth (VERDICT r16 #2).
-    calib_end_warm = None if skip_calib else calibrate(spark, run)
+    # End probes, both methodologies (r17): see calibration_record.
+    calib_end_warm = None if skip_calib else calibrate(spark)
     calib_end = None if skip_calib else calibrate_cold()
-    if calib_end is None:
-        calib_end = calib_end_warm  # subprocess failed: legacy fallback
+    calibration = calibration_record(calib_start, calib_end, calib_end_warm)
+    host_factor = calibration["host_factor"] if calibration else None
     total = round(sum(timings.values()), 3)
     total_single = round(sum(singles.values()), 3)
     dt = total1 - total0
     steal_pct = round(100.0 * (steal1 - steal0) / dt, 2) if dt > 0 else None
-    calibration = None
-    host_factor = None
-    if calib_start is not None and calib_end is not None:
-        host_factor = round(
-            (calib_start["host_factor"] * calib_end["host_factor"]) ** 0.5,
-            3,
-        )
-        calibration = {
-            "reference_sec": CALIBRATION_REFERENCE,
-            "reference_window": "r15 2026-08-16 best-of-5 at 0.04% steal",
-            "start": calib_start,
-            "end": calib_end,
-            "end_warm": calib_end_warm,
-            # One number to divide raw seconds by when comparing rounds
-            # (start + cold-subprocess end since r17).
-            "host_factor": host_factor,
-        }
+    # Effective core count of this run: records are only comparable at
+    # equal parallelism (r17 verdict #2, ``suspect_cpus_ignored``).
+    cores = spark.sparkContext.defaultParallelism
 
     # Full per-query detail goes to a committed file; the driver's stdout
     # capture keeps only the LAST 2000 chars, and r15's single fat JSON
@@ -265,6 +287,7 @@ def main() -> None:
         # seconds are not comparable (SCALE.md §0).
         "steal_pct": steal_pct,
         "loadavg_start": load0,
+        "cores": cores,
         # Pinned-probe calibration: divide raw seconds by host_factor
         # before comparing across rounds.
         "calibration": calibration,
@@ -293,6 +316,7 @@ def main() -> None:
         "value_single": total_single,
         "steal_pct": steal_pct,
         "host_factor": host_factor,
+        "cores": cores,
         "n_queries": len(timings),
         "detail": detail_path,
     }

@@ -22,10 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_preparation_plugin_spark.operators.base import BaseOperator
-
-
-def _quote(name: str) -> str:
-    return ".".join(f"`{p}`" for p in name.split("."))
+from data_preparation_plugin_spark.operators.copy import _quote
 
 
 class TransformOperator(BaseOperator):

@@ -1980,7 +1980,8 @@ def dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingles and corrupt intersection counts, so fail loudly — at
     # that point the fix is widening the surrogate (e.g. pairing
     # xxhash64 with a second seed), not silent output.
-    n_docs, n_rows, n_sids = (
+    # ``_``: the doc_sets count only forces doc_sets to materialize.
+    _, n_rows, n_sids = (
         doc_sets.agg(F.count(F.lit(1)).alias("nd"))
         .crossJoin(
             vocab.agg(
@@ -2383,21 +2384,15 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_of(name: str) -> str:
-    from data_preparation_plugin_spark.plans.registry import QUERIES
-
-    return QUERIES[name].oracle
-
-
 # Composed verbatim from the two registered members (the knn_ivf_recall_audit
 # pattern): edits to either decontamination oracle flow into the audit.
 _BLOOM_FP_ORACLE = f"""
     WITH bloom_side AS (
         SELECT doc_id, n_flagged_ngrams
-        FROM ({_oracle_of("dedup_bloom_decontaminate")})
+        FROM ({QUERIES["dedup_bloom_decontaminate"].oracle})
     ), exact_side AS (
         SELECT doc_id, n_contaminated_ngrams
-        FROM ({_oracle_of("dedup_decontaminate")})
+        FROM ({QUERIES["dedup_decontaminate"].oracle})
     ), joined AS (
         SELECT b.doc_id, b.n_flagged_ngrams,
                coalesce(e.n_contaminated_ngrams, 0) AS n_exact

@@ -21,7 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_preparation_plugin_spark.plans.registry import load_table, register
+from data_preparation_plugin_spark.plans.registry import (
+    QUERIES,
+    load_table,
+    register,
+)
 
 
 def hash_bucket(key: Column | str, buckets: int = 100) -> Column:
@@ -1177,15 +1181,9 @@ def split_temporal_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_of(name: str) -> str:
-    from data_preparation_plugin_spark.plans.registry import QUERIES
-
-    return QUERIES[name].oracle
-
-
 _PACK_AUDIT_ORACLE = f"""
     WITH packed AS (
-        SELECT * FROM ({_oracle_of("sample_sequence_packing")})
+        SELECT * FROM ({QUERIES["sample_sequence_packing"].oracle})
     ), seqs AS (
         SELECT pack_stream, seq_id,
                count(*) AS n_docs,
@@ -1493,8 +1491,6 @@ def _leakage_oracle() -> str:
     """Compose the registered split and LSH-pairs oracles (the
     ``dedup_lsh_recall_audit`` discipline) into the cross-split
     leakage audit."""
-    from data_preparation_plugin_spark.plans.registry import QUERIES
-
     split = QUERIES["split_train_test"].oracle
     pairs = QUERIES["dedup_minhash_lsh_pairs"].oracle
     return f"""

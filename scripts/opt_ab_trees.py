@@ -23,6 +23,7 @@ import subprocess
 import sys
 from pathlib import Path
 
+# Self-contained on purpose: tree B may predate bench.run_noop/best_of.
 SNIPPET = r"""
 import json, os, sys, time
 sys.path.insert(0, sys.argv[1])

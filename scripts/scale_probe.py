@@ -19,13 +19,13 @@ import json
 import os
 import shutil
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import best_of  # noqa: E402
 from data_preparation_plugin_spark import get_spark  # noqa: E402
 from data_preparation_plugin_spark.plans import QUERIES  # noqa: E402
 from data_preparation_plugin_spark.plans.registry import load_table  # noqa: E402
@@ -666,25 +666,25 @@ def main() -> None:
     spark = get_spark(app_name="dpp-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(df):
-        df.write.format("noop").mode("overwrite").save()
+    def timed(builder, fixture_dir: str, warm: bool) -> float:
+        # Single shot; ``warm`` first runs it once untimed on the fixture.
+        best, _ = best_of(
+            spark, builder, fixture_dir, 1, fixture_dir if warm else None
+        )
+        return round(best, 3)
 
     dirs = {f: build_scale(spark, f) for f in factors}
     results: dict[str, dict[int, float]] = {}
     for name in PROBES:
         builder = QUERIES[name].builder
-        run(builder(spark, dirs[factors[0]]))  # warm codegen/JVM
-        if name in WARM_EACH_FACTOR:
-            # Queries probing PERSISTED state build it lazily per fixture
-            # dir; the probe measures the steady state, so pay the
-            # one-time build outside the timed run at every factor.
-            for f in factors[1:]:
-                run(builder(spark, dirs[f]))
         results[name] = {}
         for f in factors:
-            t0 = time.perf_counter()
-            run(builder(spark, dirs[f]))
-            dt = round(time.perf_counter() - t0, 3)
+            # Warm codegen/JVM at the first factor. Queries probing
+            # PERSISTED state build it lazily per fixture dir; the probe
+            # measures the steady state, so they pay the one-time build
+            # outside the timed run at every factor.
+            warm = f == factors[0] or name in WARM_EACH_FACTOR
+            dt = timed(builder, dirs[f], warm)
             results[name][f] = dt
             row = {"query": name, "scale": f, "sec": dt}
             if name in TELEMETRY:
@@ -695,12 +695,9 @@ def main() -> None:
     if not only or "dedup_substr_doubling" in PROBES:
         builder = QUERIES["dedup_substr_doubling"].builder
         odirs = {f: build_organic(spark, f) for f in factors}
-        run(builder(spark, odirs[factors[0]]))
         otimes = {}
         for f in factors:
-            t0 = time.perf_counter()
-            run(builder(spark, odirs[f]))
-            dt = round(time.perf_counter() - t0, 3)
+            dt = timed(builder, odirs[f], f == factors[0])
             otimes[f] = dt
             row = {
                 "query": "dedup_substr_doubling",
