@@ -1176,47 +1176,90 @@ WRITER_LOCK_TIMEOUT_S = 300.0
 def single_writer(target_dir: str, done: list, label: str):
     """O_CREAT|O_EXCL single-writer discipline for a persisted-index dir.
 
-    The one lock protocol every index writer here shares (r15 grew it
-    ad-hoc in ``write_cycle_delta``/``compact_archive_indexes``/
-    ``admit_ivf_batch``; r16 ADVICE asked for the same guarantee on the
-    base builders, so it is now a helper). Yields ``True`` when this
-    caller holds the lock and must write; yields ``False`` when another
-    writer completed every ``done`` marker while we waited — the caller
-    then just reads. A crashed writer leaves a stale lockfile that times
-    out after ``WRITER_LOCK_TIMEOUT_S`` with a remove-hint.
+    The lock under :func:`stage_once`, the one protocol every staged or
+    persisted cache here goes through. Yields ``True`` when this caller
+    holds the lock and must write; yields ``False`` when another writer
+    completed every ``done`` marker while we waited — the caller then
+    just reads. A waiter retries the lock on every poll, so when the
+    writer raises (lock released, no markers) one waiter takes over and
+    writes instead of spinning to the timeout. A crashed writer leaves a
+    stale lockfile that times out after ``WRITER_LOCK_TIMEOUT_S`` with a
+    remove-hint.
 
     Half-written reads are excluded by marker discipline, not the lock
     alone: a lock-holding REBUILD must first REMOVE its ``done`` markers
-    (see the builders) so a waiter can never satisfy the all-markers
-    check between two partial part-table writes.
+    (:func:`stage_once` does) so a waiter can never satisfy the
+    all-markers check between two partial part-table writes.
     """
     import time
 
     os.makedirs(target_dir, exist_ok=True)
     lock = os.path.join(target_dir, ".writer.lock")
+    deadline = time.monotonic() + WRITER_LOCK_TIMEOUT_S
+    waited = False
+    while True:
+        try:
+            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            break
+        except FileExistsError:
+            waited = True
+        if all(os.path.exists(p) for p in done):
+            yield False
+            return
+        if time.monotonic() > deadline:
+            raise TimeoutError(
+                f"{label} writer lock {lock} held "
+                f">{WRITER_LOCK_TIMEOUT_S}s with no _SUCCESS markers. "
+                "A legitimately long write also triggers this — "
+                "VERIFY the writing session is dead, then remove "
+                "the lockfile to retry (removing a live writer's "
+                "lock re-admits the clobber race this lock exists "
+                "to prevent); otherwise raise WRITER_LOCK_TIMEOUT_S"
+            )
+        time.sleep(0.2)
     try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        deadline = time.monotonic() + WRITER_LOCK_TIMEOUT_S
-        while not all(os.path.exists(p) for p in done):
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"{label} writer lock {lock} held "
-                    f">{WRITER_LOCK_TIMEOUT_S}s with no _SUCCESS markers. "
-                    "A legitimately long write also triggers this — "
-                    "VERIFY the writing session is dead, then remove "
-                    "the lockfile to retry (removing a live writer's "
-                    "lock re-admits the clobber race this lock exists "
-                    "to prevent); otherwise raise WRITER_LOCK_TIMEOUT_S"
-                )
-            time.sleep(0.2)
-        yield False
-        return
-    try:
-        yield True
+        # A waiter that took the lock over re-checks: the writer it
+        # waited on may have completed the markers just before releasing.
+        yield not (waited and all(os.path.exists(p) for p in done))
     finally:
         os.close(fd)
         os.unlink(lock)
+
+
+@contextlib.contextmanager
+def stage_once(
+    cache: str,
+    done: list,
+    label: str,
+    key: str | None = None,
+    force: bool = False,
+):
+    """The one write-once protocol of every staged or persisted cache dir.
+
+    Yields ``True`` only when the caller must write (and complete the
+    ``done`` markers). Owns the lock-free fast path when every marker
+    exists, the :func:`single_writer` lock and the re-check under it,
+    removing the markers before a (``force``) rebuild, and — when
+    ``key`` is given — retiring stale epochs
+    (:func:`cleanup_stale_cache_dirs`) and writing ``_KEY`` BEFORE any
+    data, so a build that dies mid-write leaves a cleanable epoch.
+    """
+    if not force and all(os.path.exists(p) for p in done):
+        yield False
+        return
+    with single_writer(cache, done, label) as acquired:
+        if not acquired or (
+            not force and all(os.path.exists(p) for p in done)
+        ):
+            yield False
+            return
+        for p in done:
+            with contextlib.suppress(OSError):
+                os.unlink(p)
+        if key is not None:
+            cleanup_stale_cache_dirs(os.path.dirname(cache), key, keep=cache)
+            write_cache_key(cache, key)
+        yield True
 
 
 def cleanup_stale_cache_dirs(root: str, key: str, keep: str) -> None:
@@ -1284,21 +1327,35 @@ def fixture_fingerprint(sf_dir: str, table: str) -> str:
         return "absent"
 
 
-def archive_index_dir(sf_dir: str) -> str:
-    """Per-fixture directory for the standing archive's persisted indexes.
-
-    Stable across processes (md5 of the path, never Python's salted
-    ``hash()``) and collision-safe across sf dirs — the same discipline
-    as ``plans/events._stage_events``. The documents table's content
-    fingerprint is part of the key: new fixture bytes at the same path
-    mean a new cache directory, never a stale index.
+def fixture_digest(sf_dir: str, table: str, variant: str | None = None) -> str:
+    """12-hex md5 of the path, the table's content fingerprint and an
+    optional ``variant``: stable across processes (never the salted
+    ``hash()``), distinct per sf dir, new when the fixture is regenerated.
     """
     import hashlib
 
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'documents')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
+    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, table)}"
+    if variant is not None:
+        key += f"|{variant}"
+    return hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
+
+
+def fixture_cache_dir(
+    root: str, sf_dir: str, table: str, variant: str | None = None
+) -> str:
+    """``<root>/<sf basename>-<fixture_digest>``, the layout whose epochs
+    :func:`cleanup_stale_cache_dirs` retires."""
     base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    return os.path.join(_ARCHIVE_IDX_ROOT, f"{base}-{digest}")
+    return os.path.join(
+        root, f"{base}-{fixture_digest(sf_dir, table, variant)}"
+    )
+
+
+def archive_index_dir(sf_dir: str) -> str:
+    """Per-fixture directory for the standing archive's persisted indexes
+    (keyed on the documents table's content, see :func:`fixture_digest`).
+    """
+    return fixture_cache_dir(_ARCHIVE_IDX_ROOT, sf_dir, "documents")
 
 
 def build_archive_indexes(
@@ -1341,22 +1398,10 @@ def build_archive_indexes(
         os.path.join(base, part, "_SUCCESS")
         for part in ("fingerprints", "signatures", "bands")
     ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer like every index writer here (r16 ADVICE: the entry-
-    # point builders raced too, not just the appends): one session
-    # builds, concurrent callers wait on the markers.
-    with single_writer(base, done, "archive index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            # Remove markers FIRST so no waiter passes the all-markers
-            # check between two partial part-table rewrites.
-            for p in done:
-                with contextlib.suppress(OSError):
-                    os.unlink(p)
-            cleanup_stale_cache_dirs(_ARCHIVE_IDX_ROOT, sf_dir, keep=base)
-            # _KEY FIRST: a build that dies mid-write must still leave
-            # an identifiable (hence cleanable) epoch (r16 review).
-            write_cache_key(base, sf_dir)
+    with stage_once(
+        base, done, "archive index", key=sf_dir, force=force
+    ) as must_write:
+        if must_write:
             docs = load_table(spark, sf_dir, "documents").filter(
                 F.col("doc_id") % INCR_MINHASH_MOD != 0
             )
@@ -1571,13 +1616,12 @@ def write_cycle_delta(
     100 TB steady state where a monthly refresh touches only
     batch-proportional bytes.
 
-    Single-writer per (fixture, cycle): the first caller takes an
-    exclusive ``O_CREAT|O_EXCL`` lockfile and writes; concurrent
-    callers WAIT on the ``_SUCCESS`` markers instead of racing the
-    overwrite (r15 ADVICE — the previous shape let two sessions clobber
-    a shared ``*_delta`` dir mid-read). A completed cycle is cached and
-    never rewritten; a crashed writer leaves a stale lock that times
-    out with an actionable message.
+    Single-writer per (fixture, cycle) via :func:`stage_once`: the
+    first caller writes; concurrent callers WAIT on the ``_SUCCESS``
+    markers instead of racing the overwrite (r15 ADVICE — the previous
+    shape let two sessions clobber a shared ``*_delta`` dir mid-read).
+    A completed cycle is cached and never rewritten; a crashed writer
+    leaves a stale lock that times out with an actionable message.
     """
     from data_preparation_plugin_spark.layout import write_partitioned
     from data_preparation_plugin_spark.plans.dedup import (
@@ -1591,10 +1635,8 @@ def write_cycle_delta(
         os.path.join(cdir, part, "_SUCCESS")
         for part in ("fingerprints", "signatures", "bands")
     ]
-    if all(os.path.exists(p) for p in done):
-        return cdir
-    with single_writer(cdir, done, "cycle delta") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
+    with stage_once(cdir, done, "cycle delta") as must_write:
+        if must_write:
             adm_docs.select(F.md5("text").alias("fp")).distinct().join(
                 fp_idx, "fp", "left_anti"
             ).write.mode("overwrite").parquet(
@@ -1895,10 +1937,8 @@ def compact_archive_indexes(
         os.path.join(odir, part, "_SUCCESS")
         for part in ("fingerprints", "signatures", "bands")
     ]
-    if all(os.path.exists(p) for p in done):
-        return odir
-    with single_writer(odir, done, "compaction") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
+    with stage_once(odir, done, "compaction") as must_write:
+        if must_write:
             fps, sigs, bands = read_archive_indexes(
                 spark, base, cycles=cycle_dirs
             )

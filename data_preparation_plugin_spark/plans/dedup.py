@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 from data_preparation_plugin_spark.functions.hashing import minhash_hex
 from data_preparation_plugin_spark.functions.vector import l2_norm
 from data_preparation_plugin_spark.functions.text import exploded_shingles
-from data_preparation_plugin_spark.functions.text import shingles as _shingles
 from data_preparation_plugin_spark.functions.text import tokens as tokens_col
 from data_preparation_plugin_spark.plans.registry import (
     NONZERO_VEC_SQL,
@@ -51,11 +50,6 @@ SHINGLE_SIZE = 3
 MAX_SHINGLE_DF = 100
 #: Exact all-pairs cosine dedup is O(n^2); the declared baseline bound.
 DEDUP_COSINE_SAMPLE = 1000
-
-
-def shingles_col(text: Column, k: int = SHINGLE_SIZE) -> Column:
-    """k-word shingles of normalized text; whole text if shorter than k."""
-    return _shingles(text, k)
 
 
 _SHINGLES_SQL = r"""

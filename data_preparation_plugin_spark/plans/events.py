@@ -152,21 +152,20 @@ _STREAM_RUN_COUNTER = 0
 REPLAY_STATE_PARTITIONS = 4
 
 
-def _retire_legacy_flat_stages(prefix: str) -> None:
-    """Remove pre-r16 FLAT staging dirs (``/tmp/<prefix>-<base>-<digest>``).
-
-    r16 moved the staging caches under ``/tmp/<prefix>/``; nothing can
-    read the old flat layout anymore, so any directory still matching it
-    is a dead epoch the new root's cleanup can never see (r16 review).
+def _events_stage_dir(sf_dir: str, prefix: str) -> str:
+    """``<tmp>/<prefix>/<sf basename>-<digest>``: one replay stage's cache
+    dir, keyed on the events table's content (``curation.fixture_digest``).
     """
-    import glob
     import os
-    import shutil
     import tempfile
 
-    for d in glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}-*")):
-        if os.path.isdir(d):
-            shutil.rmtree(d, ignore_errors=True)
+    from data_preparation_plugin_spark.plans.curation import (
+        fixture_cache_dir,
+    )
+
+    return fixture_cache_dir(
+        os.path.join(tempfile.gettempdir(), prefix), sf_dir, "events"
+    )
 
 
 def _stage_events(spark: SparkSession, sf_dir: str) -> str:
@@ -177,40 +176,25 @@ def _stage_events(spark: SparkSession, sf_dir: str) -> str:
     both defeated the ``_SUCCESS`` cache across runs and risked two sf
     dirs colliding onto one staged dir that would then be silently
     replayed as the wrong fixture. md5 of the path plus the basename is
-    deterministic and collision-safe. r16 sweep of the index-writer
-    ADVICE classes: the key now folds in the events table's CONTENT
-    fingerprint (a regenerated fixture stages fresh, stale epochs are
-    removed via the ``_KEY`` protocol) and the write runs under
-    ``curation.single_writer`` (two sessions racing the overwrite could
-    hand one of them a half-written replay source).
+    deterministic and collision-safe. The key folds in the events
+    table's CONTENT fingerprint (a regenerated fixture stages fresh,
+    stale epochs are removed via the ``_KEY`` protocol) and the write
+    runs under ``curation.stage_once`` (two sessions racing the
+    overwrite could hand one of them a half-written replay source).
     """
-    import hashlib
     import os
-    import tempfile
 
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
-    )
+    from data_preparation_plugin_spark.plans.curation import stage_once
 
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-replay")
-    cache = os.path.join(root, f"{base}-{digest}")
+    cache = _events_stage_dir(sf_dir, "dpp-events-replay")
     # The parquet table lives in a SUBdir: a mode("overwrite") write to
     # the locked dir itself would delete the lockfile mid-hold.
     staged = os.path.join(cache, "events")
     done = [os.path.join(staged, "_SUCCESS")]
-    if all(os.path.exists(p) for p in done):
-        return staged
-    with single_writer(cache, done, "events replay stage") as acquired:
-        if acquired and not all(os.path.exists(p) for p in done):
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-replay")
-            write_cache_key(cache, sf_dir)  # pre-write: r16 review
+    with stage_once(
+        cache, done, "events replay stage", key=sf_dir
+    ) as must_write:
+        if must_write:
             load_table(spark, sf_dir, "events").repartition(4).write.mode(
                 "overwrite"
             ).parquet(staged)
@@ -642,44 +626,28 @@ def _stage_events_duplicated(spark: SparkSession, sf_dir: str) -> str:
     ``dropDuplicatesWithinWatermark`` exists to clean. A dedicated
     ``_STAGED_OK`` marker (written only after BOTH writes land) gates the
     cache, because each append also drops its own ``_SUCCESS``. Locked
-    and content-keyed like ``_stage_events`` (r16 sweep): the two-write
-    staging is exactly the shape where an unlocked concurrent reader
-    sees the single-copy intermediate state and its dedup replay
-    silently degenerates.
+    and content-keyed like ``_stage_events``: the two-write staging is
+    exactly the shape where an unlocked concurrent reader sees the
+    single-copy intermediate state and its dedup replay silently
+    degenerates.
     """
-    import hashlib
     import os
-    import tempfile
-    from pathlib import Path
+    import shutil
 
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
-    )
+    from data_preparation_plugin_spark.plans.curation import stage_once
 
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-dupreplay")
-    cache = os.path.join(root, f"{base}-{digest}")
+    cache = _events_stage_dir(sf_dir, "dpp-events-dupreplay")
     staged = os.path.join(cache, "events")
-    marker = Path(cache) / "_STAGED_OK"
-    if marker.exists():
-        return staged
-    with single_writer(cache, [str(marker)], "dup-replay stage") as acquired:
-        if acquired and not marker.exists():
-            import shutil
-
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-dupreplay")
-            write_cache_key(cache, sf_dir)  # pre-write: r16 review
+    marker = os.path.join(cache, "_STAGED_OK")
+    with stage_once(
+        cache, [marker], "dup-replay stage", key=sf_dir
+    ) as must_write:
+        if must_write:
             shutil.rmtree(staged, ignore_errors=True)
             events = load_table(spark, sf_dir, "events")
             events.repartition(4).write.mode("overwrite").parquet(staged)
             events.repartition(2).write.mode("append").parquet(staged)
-            marker.touch()
+            open(marker, "w").close()
     return staged
 
 
@@ -907,6 +875,7 @@ def events_stream_merge_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the table streams map-side; the checkpointed rewrite is the
     same compact-on-write discipline as ``sink_merge_upsert``.
     """
+    import shutil
     import tempfile
 
     from data_preparation_plugin_spark.layout import merge_upsert
@@ -952,14 +921,22 @@ def events_stream_merge_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         query.awaitTermination()
+        # Materialized, so the table dir is disposable like the finished
+        # availableNow query's checkpoint (same as sink_stream_quantile_pg).
+        return (
+            spark.read.parquet(target_dir)
+            .select(
+                "user_id",
+                "event_type",
+                "n_events",
+                F.round("total_value", 2).alias("total_value"),
+            )
+            .localCheckpoint(eager=True)
+        )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    return spark.read.parquet(target_dir).select(
-        "user_id",
-        "event_type",
-        "n_events",
-        F.round("total_value", 2).alias("total_value"),
-    )
+        shutil.rmtree(ckpt_dir, ignore_errors=True)
+        shutil.rmtree(target_dir, ignore_errors=True)
 
 
 #: Watermark delay modeled by `events_watermark_audit`, in minutes.
@@ -1257,36 +1234,22 @@ def _stage_events_sorted(spark: SparkSession, sf_dir: str) -> str:
     Locked and content-keyed like the other two stages — this was the
     THIRD staging helper, missed by the r16 sweep until the adversarial
     edge drive served a stale epoch (Spark emitted purchases that no
-    longer existed in the regenerated fixture) and exposed it.
+    longer existed in the regenerated fixture) and exposed it; all
+    three now share ``curation.stage_once``.
     """
-    import hashlib
+    import glob
     import os
-    import tempfile
+    import shutil
 
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        fixture_fingerprint,
-        single_writer,
-        write_cache_key,
-    )
+    from data_preparation_plugin_spark.plans.curation import stage_once
 
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    root = os.path.join(tempfile.gettempdir(), "dpp-events-sortedreplay")
-    cache = os.path.join(root, f"{base}-{digest}")
+    cache = _events_stage_dir(sf_dir, "dpp-events-sortedreplay")
     staged = os.path.join(cache, "events")
     marker = os.path.join(cache, "_STAGED_OK")
-    if os.path.exists(marker):
-        return staged
-    with single_writer(cache, [marker], "sorted-replay stage") as acquired:
-        if acquired and not os.path.exists(marker):
-            import glob
-            import shutil
-
-            cleanup_stale_cache_dirs(root, sf_dir, keep=cache)
-            _retire_legacy_flat_stages("dpp-events-sortedreplay")
-            write_cache_key(cache, sf_dir)
+    with stage_once(
+        cache, [marker], "sorted-replay stage", key=sf_dir
+    ) as must_write:
+        if must_write:
             shutil.rmtree(staged, ignore_errors=True)
             events = load_table(spark, sf_dir, "events")
             (
@@ -5111,15 +5074,9 @@ def quantile_sink_table(sf_dir: str) -> str:
     other's DROP/recreate; a single fixture's runs remain single-writer,
     the same contract as ``curation.write_cycle_delta`` (r15 ADVICE).
     """
-    import hashlib
+    from data_preparation_plugin_spark.plans.curation import fixture_digest
 
-    from data_preparation_plugin_spark.plans.curation import (
-        fixture_fingerprint,
-    )
-
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'events')}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    return f"dpp_stream_quantile_cells_{digest}"
+    return f"dpp_stream_quantile_cells_{fixture_digest(sf_dir, 'events')}"
 
 
 #: Watermark delay for the PG-sinked daily quantile dashboard; only

@@ -179,29 +179,6 @@ def knn_bruteforce_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def knn_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Random-hyperplane LSH bucket assignment (the ANN index itself).
-
-    Bucketing is a narrow map — each vector hashes independently, so index
-    construction scales embarrassingly; the bucket histogram here is what
-    an operator would monitor for skew. Library form only — unregistered:
-    ``knn_lsh_cosine`` exercises the identical bucket expression end-to-end
-    (bucket build + candidate join + top-k), so the histogram alone added
-    no oracle coverage.
-    """
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    return (
-        emb.select("vec_id", _bucket_col(F.col("v")).alias("bucket"))
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.min("vec_id").alias("min_vec_id"),
-        )
-    )
-
-
 @register(
     "knn_lsh_cosine",
     category="similarity",
@@ -3199,19 +3176,18 @@ def ivf_index_dir(sf_dir: str, variant: str = "full") -> str:
     (r15 ADVICE). ``variant`` separates the full-corpus index from the
     admission-test base index (built minus the held-out batch).
     """
-    import hashlib
     import os
     import tempfile
 
     from data_preparation_plugin_spark.plans.curation import (
-        fixture_fingerprint,
+        fixture_cache_dir,
     )
 
-    key = f"{sf_dir}|{fixture_fingerprint(sf_dir, 'embeddings')}|{variant}"
-    digest = hashlib.md5(key.encode("utf-8")).hexdigest()[:12]
-    base = os.path.basename(os.path.normpath(sf_dir)) or "root"
-    return os.path.join(
-        tempfile.gettempdir(), "dpp-ivf-index", f"{base}-{digest}"
+    return fixture_cache_dir(
+        os.path.join(tempfile.gettempdir(), "dpp-ivf-index"),
+        sf_dir,
+        "embeddings",
+        variant,
     )
 
 
@@ -3229,57 +3205,7 @@ def build_ivf_index(
     the inverted-list property made physical). Cached per fixture behind
     ``_SUCCESS``; production refreshes by re-assigning only new vectors.
     """
-    import contextlib
-    import os
-
-    from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        single_writer,
-        write_cache_key,
-    )
-
-    base = ivf_index_dir(sf_dir)
-    done = [
-        os.path.join(base, part, "_SUCCESS")
-        for part in ("centroids", "assignments")
-    ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer (r16 ADVICE): without the lock, two sessions that
-    # both see missing markers race overwrite-writes into the same dir,
-    # and a waiter could read centroids whose assignments are still
-    # being written. Markers are removed before a rebuild so waiters
-    # ENTERING here can never satisfy the all-markers check mid-write.
-    # Scope: the guarantee covers build-time waiters, not a reader
-    # whose lazy plan is mid-scan when another session force-rebuilds
-    # the same dir in place — same-fixture force rebuilds are a
-    # single-operator action (fixture REGENERATION gets a fresh epoch
-    # dir via the content-fingerprint key and never collides).
-    with single_writer(base, done, "IVF index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            for p in done:
-                with contextlib.suppress(OSError):
-                    os.unlink(p)
-            cleanup_stale_cache_dirs(
-                os.path.dirname(base), f"{sf_dir}|full", keep=base
-            )
-            write_cache_key(base, f"{sf_dir}|full")  # pre-write: r16 review
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", F.col("embedding").cast("array<double>").alias("v")
-            ).filter(nonzero_vec("v"))
-            cents = emb.filter(F.col("vec_id") < IVF_N_CELLS).select(
-                F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
-            )
-            cents.write.mode("overwrite").parquet(
-                os.path.join(base, "centroids")
-            )
-            write_partitioned(
-                _assign_to_codebook(emb, cents),
-                os.path.join(base, "assignments"),
-                ["cell"],
-            )
-    return base
+    return _build_ivf(spark, sf_dir, "full", (), force)
 
 
 def _assign_to_codebook(emb: DataFrame, cents: DataFrame) -> DataFrame:
@@ -3432,61 +3358,59 @@ def build_ivf_base_index(
     dir name so independent lifecycles (the steady-state admission
     query vs the retrain drill) never invalidate each other's caches.
     """
+    if variant is None:
+        variant = "base-" + "-".join(map(str, IVF_ADMIT_RESIDUES))
+    return _build_ivf(spark, sf_dir, variant, IVF_ADMIT_RESIDUES, force)
+
+
+def _build_ivf(
+    spark: SparkSession,
+    sf_dir: str,
+    variant: str,
+    held_out: tuple,
+    force: bool,
+) -> str:
+    """Write one IVF index (codebook + cell-partitioned assignments) over
+    every vector whose ``vec_id % IVF_ADMIT_MOD`` is not ``held_out``,
+    once per (fixture, ``variant``) under ``curation.stage_once``.
+
+    A rebuild also retires the held-out residues' admission artifacts
+    (markers AND crash-recovery manifests) so the rebuilt index starts
+    un-admitted. Scope of the lock: it covers build-time waiters, not a
+    reader whose lazy plan is mid-scan when another session
+    force-rebuilds the same dir in place — same-fixture force rebuilds
+    are a single-operator action (the drill's dedicated ``variant``
+    isolates it from the steady-state queries; fixture REGENERATION
+    gets a fresh epoch dir via the content-fingerprint key).
+    """
     import contextlib
     import os
 
     from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans.curation import (
-        cleanup_stale_cache_dirs,
-        single_writer,
-        write_cache_key,
-    )
+    from data_preparation_plugin_spark.plans.curation import stage_once
 
-    if variant is None:
-        variant = "base-" + "-".join(map(str, IVF_ADMIT_RESIDUES))
     base = ivf_index_dir(sf_dir, variant=variant)
     done = [
         os.path.join(base, part, "_SUCCESS")
         for part in ("centroids", "assignments")
     ]
-    if not force and all(os.path.exists(p) for p in done):
-        return base
-    # Single-writer (r16 ADVICE — the entry-point builder raced like the
-    # appends did pre-r15): rebuilds clear the part markers first so a
-    # waiter entering the lock path can never read centroids paired
-    # with half-written assignments, then retire every admission
-    # artifact (markers AND crash-recovery manifests) so the rebuilt
-    # index starts un-admitted. Same scope note as build_ivf_index:
-    # in-place force rebuilds assume no concurrent reader of the SAME
-    # dir (the drill's dedicated `variant` isolates it from the
-    # steady-state queries; concurrent bench/probe processes are a
-    # measurement-hygiene violation regardless).
-    with single_writer(base, done, "IVF base index") as acquired:
-        if acquired and (force or not all(os.path.exists(p) for p in done)):
-            for p in done:
-                with contextlib.suppress(OSError):
-                    os.unlink(p)
-            for r in IVF_ADMIT_RESIDUES:
+    key = f"{sf_dir}|{variant}"
+    with stage_once(
+        base, done, f"IVF index {variant}", key=key, force=force
+    ) as must_write:
+        if must_write:
+            for r in held_out:
                 for stale in (f"_ADMITTED_r{r}", f"_PRE_ADMIT_r{r}.json"):
                     with contextlib.suppress(OSError):
                         os.unlink(os.path.join(base, stale))
-            cleanup_stale_cache_dirs(
-                os.path.dirname(base), f"{sf_dir}|{variant}", keep=base
-            )
-            write_cache_key(base, f"{sf_dir}|{variant}")  # pre-write
-            emb = (
-                load_table(spark, sf_dir, "embeddings")
-                .filter(
-                    ~(F.col("vec_id") % IVF_ADMIT_MOD).isin(
-                        *IVF_ADMIT_RESIDUES
-                    )
+            emb = load_table(spark, sf_dir, "embeddings")
+            if held_out:
+                emb = emb.filter(
+                    ~(F.col("vec_id") % IVF_ADMIT_MOD).isin(*held_out)
                 )
-                .select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("v"),
-                )
-                .filter(nonzero_vec("v"))
-            )
+            emb = emb.select(
+                "vec_id", F.col("embedding").cast("array<double>").alias("v")
+            ).filter(nonzero_vec("v"))
             cents = emb.filter(F.col("vec_id") < IVF_N_CELLS).select(
                 F.col("vec_id").alias("cent_id"), F.col("v").alias("cv")
             )
@@ -3527,23 +3451,21 @@ def admit_ivf_batch(
     prior writer died mid-append and deletes every assignment file not
     in the snapshot — partially job-committed part files can no longer
     masquerade as base files and be double-appended. The admission lock
-    is index-global (``.admit.lock``), taken in a retry loop, so two
-    different residues can never interleave appends and corrupt each
-    other's snapshots. After admitting, check :func:`ivf_cell_skew` —
-    repeated appends drift cell sizes, and past
+    is the index dir's own ``.writer.lock`` (``curation.stage_once``),
+    so two different residues can never interleave appends and corrupt
+    each other's snapshots, and an admission never interleaves with a
+    rebuild of the same index. After admitting, check
+    :func:`ivf_cell_skew` — repeated appends drift cell sizes, and past
     ``IVF_SKEW_RETRAIN_RATIO`` the answer is a re-train
     (``build_ivf_base_index(force=True)``), not another append.
     """
     import json
     import os
-    import time
 
     from data_preparation_plugin_spark.layout import write_partitioned
-    from data_preparation_plugin_spark.plans import curation
+    from data_preparation_plugin_spark.plans.curation import stage_once
 
     marker = os.path.join(base, f"_ADMITTED_r{residue}")
-    if os.path.exists(marker):
-        return
     adir = os.path.join(base, "assignments")
 
     def _listing() -> list:
@@ -3555,29 +3477,8 @@ def admit_ivf_batch(
                 )
         return sorted(out)
 
-    lock = os.path.join(base, ".admit.lock")
-    deadline = time.monotonic() + curation.WRITER_LOCK_TIMEOUT_S
-    while True:
-        if os.path.exists(marker):
-            return
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"IVF admit lock {lock} held "
-                    f">{curation.WRITER_LOCK_TIMEOUT_S}s with no "
-                    f"_ADMITTED_r{residue} marker. A legitimately slow "
-                    "admission of ANOTHER residue also holds this "
-                    "index-global lock — VERIFY the writing session is "
-                    "dead, then remove the lockfile to retry "
-                    "(removing a live writer's lock interleaves "
-                    "appends); otherwise raise WRITER_LOCK_TIMEOUT_S"
-                )
-            time.sleep(0.2)
-    try:
-        if os.path.exists(marker):  # re-check under the lock
+    with stage_once(base, [marker], "IVF admission") as must_write:
+        if not must_write:
             return
         pre = os.path.join(base, f"_PRE_ADMIT_r{residue}.json")
         if os.path.exists(pre):
@@ -3611,9 +3512,6 @@ def admit_ivf_batch(
         with open(marker, "w"):
             pass
         os.unlink(pre)
-    finally:
-        os.close(fd)
-        os.unlink(lock)
 
 
 def ivf_cell_skew(spark: SparkSession, base: str) -> dict:

@@ -218,19 +218,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Normalized-content fingerprint (md5 over whitespace-collapsed text).
-
-    Library form only — unregistered: ``dedup_exact_fingerprint``
-    (plans/dedup.py) is the oracle-checked superset (same projection
-    plus the digest group-agg), so registering both would double-count
-    one capability in the registry.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    normalized = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    return docs.select("doc_id", F.md5(normalized).alias("fingerprint"))
-
-
 @register(
     "text_top_terms",
     category="text",
